@@ -26,7 +26,11 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 
-from fresco_hpc_spark.plans.store import list_partition_files, read_partitioned_store
+from fresco_hpc_spark.plans.store import (
+    hours_by_day,
+    list_partition_files,
+    read_partitioned_store,
+)
 
 # Q3: regex extraction of the canonical predicate (lambda_handler.py:155-176;
 # duplicated client-side at web/src/util/client.ts:389-412).
@@ -125,24 +129,14 @@ def required_hours(start: datetime, end: datetime) -> list[datetime]:
     return out
 
 
-def _hour_fragment(h: datetime) -> str:
-    """Partition-path fragment for one hour; matched as a substring so the
-    scheme (file:/, hdfs://, s3a://) of the listing is irrelevant."""
-    return f"/year={h.year}/month={h.month}/day={h.day}/hour={h.hour}/"
-
-
 def plan_query(spark: SparkSession, sql: str, store_path: str) -> QueryPlan:
     """Q5+Q6+Q7: prune the hour-partitioned store to the query's hours and
     size the read. The listing is driver-side metadata only (like the
-    reference's manifest lookup); the data path is ``execute``."""
+    reference's manifest lookup) and visits only the window's hour
+    directories; the data path is ``execute``."""
     start, end = extract_time_range(sql)
     hours = required_hours(start, end)
-    wanted = {_hour_fragment(h) for h in hours}
-    files = [
-        (f, size)
-        for f, size in list_partition_files(spark, store_path)
-        if any(frag in f for frag in wanted)
-    ]
+    files = list_partition_files(spark, store_path, hours)
     total = sum(size for _, size in files)
     # Q6: partition_count = min(4, n_chunks, max(1, round(total/50MB)))
     n_chunks = len(files)
@@ -192,14 +186,11 @@ def execute(
     # comparisons are NOT pruned): one conjunct per day, OR'd. The
     # reference caps windows at 30 days (query_builder.tsx:11), so this
     # stays <=31 disjuncts.
-    by_day: dict[tuple[int, int, int], list[int]] = {}
-    for h in hours:
-        by_day.setdefault((h.year, h.month, h.day), []).append(h.hour)
     disjuncts = [
         "(year = {} AND month = {} AND day = {} AND hour IN ({}))".format(
-            y, m, d, ",".join(str(x) for x in sorted(hs))
+            y, m, d, ",".join(str(x) for x in hs)
         )
-        for (y, m, d), hs in sorted(by_day.items())
+        for (y, m, d), hs in hours_by_day(hours)
     ]
     pred = " OR ".join(disjuncts)
     pruned = (

@@ -12,6 +12,9 @@ automatically — no custom FileIndex needed (SURVEY.md §4).
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+from datetime import datetime
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -246,24 +249,59 @@ def write_bucketed_table(
     )
 
 
-def list_partition_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(file, size) listing via the Hadoop FileSystem API — works on
-    hdfs:// and s3a:// the same as file://, unlike os.walk. Used only by
-    the planner facade for plan metadata, never on the query path."""
+def hours_by_day(hours: Iterable[datetime]) -> list[tuple[tuple[int, int, int], list[int]]]:
+    """Group hours into ``((year, month, day), sorted hours)`` pairs, in
+    day order: one entry per day partition the hours fall in."""
+    by_day: dict[tuple[int, int, int], set[int]] = {}
+    for h in hours:
+        by_day.setdefault((h.year, h.month, h.day), set()).add(h.hour)
+    return [(day, sorted(hs)) for day, hs in sorted(by_day.items())]
+
+
+def _glob_escape(s: str) -> str:
+    return "".join("\\" + c if c in "{}[]*?\\" else c for c in s)
+
+
+def list_partition_files(
+    spark: SparkSession,
+    path: str,
+    hours: Iterable[datetime] | None = None,
+) -> list[tuple[str, int]]:
+    """(file, size) of the store's parquet files, through the Hadoop
+    FileSystem API, so hdfs:// and s3a:// list the same as file://.
+
+    ``hours`` limits the listing to those hour partitions (an hour with
+    no directory simply lists nothing); ``None`` lists the whole store.
+    The cost is one ``globStatus`` call that walks only the matching
+    directories: ``<root>/{year=Y/month=M/day=D/hour={h1,h2,...},...}/*.parquet``
+    with one brace alternative per day, or ``year=*/month=*/day=*/hour=*``
+    for the whole store. The pattern also matches one leading partition
+    level above ``year=`` (the ``batch_id=`` of
+    :func:`fresco_hpc_spark.streaming.exactly_once_store_writer`), and
+    glob metacharacters in ``path`` are escaped so the root is taken
+    literally.
+
+    Sizes come from the plain ``FileStatus`` objects the glob returns.
+    A recursive ``listFiles`` would build a ``LocatedFileStatus`` per
+    file instead, whose permission lookup forks a child process per file
+    on the local file system when the native Hadoop library is absent.
+    """
+    if hours is None:
+        parts = "year=*/month=*/day=*/hour=*"
+    else:
+        days = [
+            f"year={y}/month={m}/day={d}/hour={{{','.join(map(str, hs))}}}"
+            for (y, m, d), hs in hours_by_day(hours)
+        ]
+        if not days:
+            return []
+        parts = "{" + ",".join(days) + "}"
+    pattern = f"{_glob_escape(path.rstrip('/'))}/{{,*=*/}}{parts}/*.parquet"
     sc = spark.sparkContext
-    hadoop_conf = sc._jsc.hadoopConfiguration()
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hadoop_conf)
-    out: list[tuple[str, int]] = []
-    if not fs.exists(jpath):
-        return out
-    it = fs.listFiles(jpath, True)  # recursive
-    while it.hasNext():
-        status = it.next()
-        p = status.getPath().toString()
-        if p.endswith(".parquet"):
-            out.append((p, int(status.getLen())))
-    return out
+    jpattern = sc._jvm.org.apache.hadoop.fs.Path(pattern)
+    fs = jpattern.getFileSystem(sc._jsc.hadoopConfiguration())
+    statuses = fs.globStatus(jpattern)  # the API may return null for no match
+    return [(st.getPath().toString(), int(st.getLen())) for st in statuses or []]
 
 
 def compact_store(
@@ -515,7 +553,9 @@ def merge_into_store(
             for t in touched
         ],
     )
-    if fs.exists(_jp(path)) and list_partition_files(spark, path):
+    # survivors can only come from the touched hours, so only they are
+    # listed: a batch of brand-new hours skips the read entirely
+    if list_partition_files(spark, path, [datetime(*t) for t in touched]):
         live = read_partitioned_store(spark, path).filter(hour_pred)
         key_match = reduce(
             lambda a, b: a & b,

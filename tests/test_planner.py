@@ -8,6 +8,7 @@ time-range extraction (155-176, error at 290-292), hour expansion
 
 from __future__ import annotations
 
+import os
 from datetime import datetime
 
 import pytest
@@ -18,6 +19,7 @@ from fresco_hpc_spark.plans import (
     extract_filters,
     extract_projections,
     extract_time_range,
+    list_partition_files,
     plan_query,
     required_hours,
     write_partitioned_store,
@@ -87,6 +89,89 @@ def test_plan_prunes_to_required_hours(spark, store):
         assert any(f"/hour={h}/" in f for h in (1, 2, 3))
     assert plan.estimated_size_bytes > 0
     assert 1 <= plan.partition_count <= 4
+
+
+def _hour_store(spark, path, hours):
+    """Write one row, hence one parquet file, for each hour in ``hours``."""
+    from pyspark.sql import functions as F
+
+    rows = spark.createDataFrame(
+        [(i, f"{h:%Y-%m-%d %H}:17:00") for i, h in enumerate(hours)],
+        "id long, time_s string",
+    ).select("id", F.to_timestamp("time_s").alias("time"))
+    write_partitioned_store(rows, path)
+
+
+def test_window_listing_across_day_and_month_boundary(spark, tmp_path):
+    """Listing the window's hours equals the whole-store listing filtered
+    to them, across a day and a month boundary, skipping hours with no
+    directory; a window over no stored hour plans no chunks."""
+    path = str(tmp_path / "store")
+    stored = [datetime(2024, 1, 31, 20), datetime(2024, 1, 31, 22),
+              datetime(2024, 1, 31, 23), datetime(2024, 2, 1, 0),
+              datetime(2024, 2, 1, 2), datetime(2024, 2, 1, 5)]
+    _hour_store(spark, path, stored)
+    everything = list_partition_files(spark, path)
+    assert len(everything) == len(stored)
+
+    window = required_hours(datetime(2024, 1, 31, 21, 30), datetime(2024, 2, 1, 2, 0))
+    assert len(window) == 6  # 21:00 and 01:00 have no directory
+    frags = {f"/year={h.year}/month={h.month}/day={h.day}/hour={h.hour}/" for h in window}
+    got = sorted(list_partition_files(spark, path, window))
+    assert got == sorted(f for f in everything if any(x in f[0] for x in frags))
+    assert len(got) == 4
+    assert list_partition_files(spark, path, [datetime(2024, 3, 1, 0)]) == []
+    assert list_partition_files(spark, path, []) == []
+
+    plan = plan_query(
+        spark,
+        "SELECT * FROM s3_fresco WHERE time BETWEEN "
+        "'2024-02-01 01:00:00' AND '2024-02-01 01:59:59'",
+        path,
+    )
+    assert plan.chunks == []
+    assert plan.estimated_size_bytes == 0
+    assert plan.partition_count == 1
+
+
+def test_list_partition_files_takes_root_literally(spark, tmp_path):
+    """Glob metacharacters in the store root are escaped: the listing
+    reads the named directory, not a sibling the unescaped pattern
+    ``run[1]{a,b}\\x*?`` would match instead."""
+    literal = str(tmp_path / "run[1]{a,b}\\x*?")
+    decoy = str(tmp_path / "run1axyz")
+    ours = [datetime(2024, 1, 31, 23), datetime(2024, 2, 1, 0)]
+    _hour_store(spark, literal, ours)
+    _hour_store(spark, decoy, [datetime(2024, 1, 31, 23), datetime(2024, 1, 31, 12)])
+
+    for hours in (None, ours):
+        files = list_partition_files(spark, literal, hours)
+        assert len(files) == len(ours)
+        assert all("/run[1]{a,b}\\x*?/" in f for f, _ in files)
+
+
+@pytest.mark.skipif(not os.path.exists("/proc/self/stat"), reason="needs Linux /proc")
+def test_store_listing_forks_no_child_process(spark, tmp_path):
+    """The listing's cost rests on never forking: a ``LocatedFileStatus``
+    on the local file system without the native Hadoop library looks up
+    permissions in a child process per file. Ten whole-store listings of
+    a 48-hour store must add no CPU to the JVM's reaped children
+    (``cutime``/``cstime`` in /proc/<pid>/stat)."""
+    from datetime import timedelta
+
+    path = str(tmp_path / "store")
+    _hour_store(spark, path, [datetime(2024, 1, 31) + timedelta(hours=i) for i in range(48)])
+    pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+
+    def reaped_children_ticks():
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+        return int(fields[13]), int(fields[14])  # fields 16 and 17
+
+    before = reaped_children_ticks()
+    for _ in range(10):
+        assert len(list_partition_files(spark, path)) == 48
+    assert reaped_children_ticks() == before
 
 
 def _formatted_plan(spark, df) -> str:
@@ -390,10 +475,10 @@ def test_merge_into_store_applies_batch_and_replays_idempotently(spark, tmp_path
     )
     changes = upd.unionByName(dele).unionByName(news)
 
-    def file_stats(exclude_hour: int):
+    def file_stats(exclude_hour: int | None = None):
         out = {}
         for p in Path(store).glob("year=*/month=*/day=*/hour=*/*.parquet"):
-            if f"hour={exclude_hour}" in str(p.parent):
+            if exclude_hour is not None and f"hour={exclude_hour}" in str(p.parent):
                 continue
             st = os.stat(p)
             out[str(p)] = (st.st_size, st.st_mtime_ns)
@@ -425,6 +510,19 @@ def test_merge_into_store_applies_batch_and_replays_idempotently(spark, tmp_path
     back2 = read_partitioned_store(spark, store).drop(*PARTITION_COLS)
     assert back2.exceptAll(expected).count() == 0
     assert expected.exceptAll(back2).count() == 0
+
+    # a batch touching only hours the non-empty store lacks: the new
+    # hours appear and every existing file stays byte-identical
+    later = news.withColumn("time", F.col("time") + F.expr("INTERVAL 3650 DAYS"))
+    before_stats = file_stats()
+    swapped = merge_into_store(spark, store, later, ["event_id"], time_col="time")
+    assert swapped and not any(p.startswith(s) for p in before_stats for s in swapped)
+    after_stats = file_stats()
+    assert {k: v for k, v in after_stats.items() if k in before_stats} == before_stats
+    expected = expected.unionByName(later.drop("op"))
+    back3 = read_partitioned_store(spark, store).drop(*PARTITION_COLS)
+    assert back3.exceptAll(expected).count() == 0
+    assert expected.exceptAll(back3).count() == 0
 
 
 def test_merge_into_store_seq_order_delete_all_and_new_store(spark, tmp_path):
